@@ -1,10 +1,10 @@
 """Property tests for the portable polynomial hash (corpus.py).
 
-The DSIR bigram optimization (operators/weighting.py) relies on the
-composition identity h(x || y) = (h(x) * B^len(y) + h(y)) mod p; if the
-hash constants or fold order ever change, these tests fail before the
-oracle comparison does (the oracle would change in lockstep and hide
-the break).
+The n-gram builder (corpus.ngrams) relies on the composition identity
+h(x || y) = (h(x) * B^len(y) + h(y)) mod p to compose gram ids from
+per-token hashes; if the hash constants or fold order ever change,
+these tests fail before the oracle comparison does (the oracle would
+change in lockstep and hide the break).
 """
 
 from __future__ import annotations
@@ -34,6 +34,18 @@ def test_hash_composition_identity(x: str, y: str) -> None:
     rhs = ((_h(x) * HASH_BASE + 32) % HASH_MOD * pow(HASH_BASE, len(y), HASH_MOD)
            + _h(y)) % HASH_MOD
     assert lhs == rhs
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(WORD, min_size=1, max_size=15))
+def test_ngram_composition_matches_joined_hash(words: list[str]) -> None:
+    """The fold corpus.ngrams runs over per-token (hash, B^len) pairs
+    equals the hash of the space-joined gram, for n = 1 .. 15."""
+    cid = _h(words[0])
+    for w in words[1:]:
+        cid = ((cid * HASH_BASE + 32) % HASH_MOD * pow(HASH_BASE, len(w), HASH_MOD)
+               + _h(w)) % HASH_MOD
+    assert cid == _h(" ".join(words))
 
 
 @settings(max_examples=300, deadline=None)

@@ -15,6 +15,8 @@ What 100 TB requires and what these tests pin:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -194,17 +196,42 @@ def test_word_freq_rank_window_is_partitioned(spark):
             assert "pid#" in ln, ln
 
 
-def test_dsir_window_shuffles_ints_not_strings(spark):
-    """The DSIR bigram window must carry (hash, length) ints — the word
-    strings stop at the scan-side projection.  If 'word' appears in the
-    window operator's output the int-composition optimization
-    regressed."""
+def test_dsir_feature_grain_has_no_window_and_no_word(spark):
+    """The DSIR unigram/bigram features come from corpus.ngrams over
+    per-token hashes: no Window, and no operator (so no Exchange)
+    carries the word string."""
     plan = _plan(QUERIES["dsir_importance"](spark, SF_DIR))
-    win = [ln for ln in plan.splitlines() if "Window" in ln and "windowspec" in ln.lower() or ln.strip().startswith("Window ")]
-    assert win, plan
-    for ln in win:
-        assert "word#" not in ln, ln
+    assert "Window" not in plan, plan
+    assert "word#" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_ngram_jaccard",
+        "dedup_minhash_lsh",
+        "decontaminate_ngram",
+        "source_overlap_matrix",
+        "quality_repetition",
+    ],
+)
+def test_ngram_consumers_build_no_gram_string(spark, name):
+    """n-grams are built inside each document's token array from hashed
+    tokens: no Window, and no space-joined gram string (the minhash band
+    key's comma join is not a gram)."""
+    plan = _plan(QUERIES[name](spark, SF_DIR))
+    assert "Window" not in plan, plan
+    assert "concat_ws( ," not in plan, plan
+
+
+def test_substring_spans_windows_are_the_island_windows(spark):
+    plan = _plan(QUERIES["dedup_substring_spans"](spark, SF_DIR))
+    assert "concat_ws( ," not in plan, plan
+    wins = [ln.strip() for ln in plan.splitlines() if "Window [" in ln]
+    assert len(wins) == 2, plan
+    for ln in wins:
+        assert re.search(r"\], \[doc_id#\d+L\], \[pos#\d+ ASC NULLS FIRST\]$", ln), ln
 
 
 def test_multimodal_passes_are_narrow(spark):

@@ -117,6 +117,120 @@ def tokens_long(documents: DataFrame) -> DataFrame:
     )
 
 
+# 131^k mod p for k < _POW_N as one SQL literal (a single py4j call)
+_POW_N = 64
+_POW_SQL = "array({})".format(
+    ", ".join(f"{pow(HASH_BASE, k, HASH_MOD)}L" for k in range(_POW_N))
+)
+
+
+def _pow_len(w: Column) -> Column:
+    """131^len(w) mod p: the multiplier that appends ``w`` to a hash.
+    Looked up for short tokens, folded for longer ones (``length`` and
+    ``split(w, '')`` both count code points)."""
+    n = F.length(w)
+    fold = F.aggregate(
+        F.sequence(F.lit(1), n),
+        F.lit(1).cast("long"),
+        lambda acc, _: (acc * HASH_BASE) % HASH_MOD,
+    )
+    return F.when(n < _POW_N, F.element_at(F.expr(_POW_SQL), n + 1)).otherwise(fold)
+
+
+def _explode(df: DataFrame, keep: list, arr: Column, name: str) -> DataFrame:
+    # explode_outer + null filter, not explode: for an inner explode
+    # Catalyst infers a size(array) > 0 filter and pushes it below the
+    # projection, which then computes the array (every token hash) twice
+    return df.select(*keep, F.explode_outer(arr).alias(name)).where(
+        F.col(name).isNotNull()
+    )
+
+
+def ngrams(
+    documents: DataFrame,
+    n: int | tuple[int, ...],
+    *keys: str,
+    pos: bool = False,
+    ids: tuple[str, ...] = ("cid", "sid"),
+) -> DataFrame:
+    """Positional (non-distinct) word n-grams: (keys..., [pos], cid, sid).
+
+    One row per gram of ``tokens_long``'s consecutive non-empty tokens,
+    built inside each document's own token array: every token is hashed
+    once, the array is zipped with its shifted slices, and the gram ids
+    are composed arithmetically. No Window, no Exchange, and no gram
+    string is ever built.
+
+    - ``cid``: the 31-bit content hash of the space-joined gram,
+      bit-identical to ``content_hash_expr(concat_ws(" ", gram))`` (the
+      value the DuckDB oracles compute), composed with the polynomial
+      identity h(x || " " || y) = ((h(x)*131 + 32) mod p) * 131^len(y)
+      + h(y) mod p. Intermediates stay below 2^63: both factors < 2^31.
+    - ``sid``: ``xxhash64`` over the n per-token ``xxhash64`` values — a
+      64-bit id for set algebra (a collision needs ~2^32 distinct grams).
+    - ``pos`` (optional): the raw split index of the gram's first token,
+      i.e. ``tokens_long``'s ``word_idx`` (empty tokens count).
+
+    ``ids`` names the ids to emit; the per-token hash behind an id is
+    computed only when that id is asked for. ``n`` may be several
+    orders, e.g. ``(1, 2)``: one row per gram of each order, all from
+    one hashing pass over the tokens.
+    """
+    ns = (n,) if isinstance(n, int) else tuple(sorted(n))
+    lo, hi = ns[0], ns[-1]
+
+    def token(w: Column, i: Column | None = None) -> Column:
+        f = []
+        if "cid" in ids:
+            f.append(content_hash_expr(w).alias("h"))
+            if hi > 1:
+                f.append(_pow_len(w).alias("p"))
+        if "sid" in ids:
+            f.append(F.xxhash64(w).alias("x"))
+        if i is not None:
+            f.append(i.alias("pos"))
+        return F.struct(*f)
+
+    raw = F.split(F.col("text"), " ")
+    if pos:
+        toks = F.array_compact(
+            F.transform(raw, lambda w, i: F.when(w != "", token(w, i)))
+        )
+    else:
+        toks = F.transform(F.array_remove(raw, ""), lambda w: token(w))
+    # arrays_zip pads the shorter slices with nulls: row i holds tokens
+    # i .. i+hi-1, and its order-k gram exists where token k-1 is set
+    m = F.size("toks") - (lo - 1)
+    z = F.arrays_zip(*[F.slice("toks", i + 1, m) for i in range(hi)])
+    g = _explode(
+        documents.select(*keys, toks.alias("toks")),
+        list(keys),
+        F.when(F.size("toks") >= lo, z),
+        "g",
+    )
+    t = [F.col("g").getField(str(i)) for i in range(hi)]
+
+    def gram_ids(k: int) -> list[Column]:
+        out = []
+        if "cid" in ids:
+            cid = t[0]["h"]
+            for e in t[1:k]:
+                cid = ((cid * HASH_BASE + 32) % HASH_MOD * e["p"] + e["h"]) % HASH_MOD
+            out.append(cid.alias("cid"))
+        if "sid" in ids:
+            out.append(F.xxhash64(*[e["x"] for e in t[:k]]).alias("sid"))
+        return out
+
+    lead = [*keys, *([t[0]["pos"].alias("pos")] if pos else [])]
+    if len(ns) == 1:
+        return g.select(*lead, *gram_ids(hi))
+    per_order = F.array(
+        *[F.when(t[k - 1].isNotNull(), F.struct(*gram_ids(k))) for k in ns]
+    )
+    head = [*keys, *(["pos"] if pos else [])]
+    return _explode(g, lead, per_order, "o").select(*head, "o.*")
+
+
 def vocab(documents: DataFrame) -> DataFrame:
     """Corpus vocabulary with content-hash token ids (deterministic).
 

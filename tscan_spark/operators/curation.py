@@ -15,7 +15,7 @@ that the dedup/quality/sampling family does not cover:
 - domain_mix_rates    : solve per-source keep rates that realize a
   target domain mixture at the maximum feasible corpus size.
 
-All pure DataFrame expressions (window leads / array slices + hash
+All pure DataFrame expressions (corpus.ngrams array slices + hash
 aggregates, no UDFs); every rule is replayable in ANSI SQL so the
 DuckDB oracles match
 bit-for-bit. Reference analog: the reference filters its input corpus
@@ -40,65 +40,20 @@ from tscan_spark import corpus
 # DataFrame). A corpus doc is contaminated when >= DECON_MIN_HITS of its
 # distinct N-grams appear anywhere in the holdout.
 #
-# Physical plan: both sides reduce to DISTINCT (doc_id, gram_id) via one
-# window-lead pass over the token grain; the holdout side collapses to
-# DISTINCT gram_id and joins the corpus grams on gram_id; one doc-keyed
-# hash aggregate counts hits. In production the benchmark is orders of
-# magnitude smaller than the corpus, so the gram-id join is a broadcast
-# and the corpus is touched exactly once; here the holdout is corpus-
-# derived, so we leave the join strategy to AQE (it stays a shuffle
-# hash join keyed on gram_id — no quadratic term at any scale). Gram
-# ids use the 31-bit replayable content hash (oracle constraint); at
-# 100 TB swap in xxhash64 — same plan, wider key.
+# Physical plan: both sides reduce to DISTINCT (doc_id, cid) over the
+# corpus.ngrams rows (built inside each document's array, no window);
+# the holdout side collapses to DISTINCT cid and joins the corpus grams
+# on cid; one doc-keyed hash aggregate counts hits. In production the
+# benchmark is orders of magnitude smaller than the corpus, so the
+# gram-id join is a broadcast and the corpus is touched exactly once;
+# here the holdout is corpus-derived, so we leave the join strategy to
+# AQE (it stays a shuffle hash join keyed on cid — no quadratic term
+# at any scale). The cid is the 31-bit replayable content hash (oracle
+# constraint); at 100 TB key on the 64-bit sid — same plan, wider key.
 
 DECON_N = 8  # n-gram order (test-set decontamination convention: 8-13)
 HOLDOUT_MOD = 10  # doc_id % 10 == 0 -> holdout "benchmark" doc
 DECON_MIN_HITS = 1
-
-
-def _gram_strings(documents: DataFrame, n: int, *keys: str) -> DataFrame:
-    """(keys..., gram): word n-grams straight from each document's own
-    (empty-filtered) token array — arrays_zip over n shifted slices,
-    zero Exchange, all codegen. The former lead()-over-Window build
-    paid a full token-grain shuffle + sort for an ordering the scan
-    provides for free (guide §2.4; same replacement as the dedup
-    shingle family). Identical gram set: tokens_long's word_idx is the
-    raw split index with empties filtered, so window leads step over
-    exactly the same consecutive non-empty tokens the array holds."""
-    arr = F.array_remove(F.split(F.col("text"), " "), "")
-    m = F.size(arr) - (n - 1)
-    z = F.arrays_zip(*[F.slice(arr, i + 1, m) for i in range(n)])
-    g = documents.select(
-        *keys, F.explode(F.when(F.size(arr) >= n, z)).alias("z")
-    )
-    return g.select(
-        *keys,
-        F.concat_ws(" ", *[F.col("z").getField(str(i)) for i in range(n)]).alias(
-            "gram"
-        ),
-    )
-
-
-def _grams(tok: DataFrame, n: int) -> DataFrame:
-    """Distinct (doc_id, gram_id) word n-grams via window leads.
-
-    Deliberately NOT the :func:`_gram_strings` array build at this
-    order: at n=8 the zip of 8 shifted string slices materializes ~8x
-    the document bytes per row and measured 2x SLOWER than the window
-    (3.0s vs 1.3s for the distinct-gram pass at sf0.1, same-JVM A/B);
-    the window's token-grain exchange is the cheaper side of that trade
-    until network dwarfs memory bandwidth. At n<=3 the copies are small
-    and the array build wins on plan shape (see _pos_grams)."""
-    w = Window.partitionBy("doc_id").orderBy("word_idx")
-    parts = [F.col("word")] + [F.lead("word", i).over(w) for i in range(1, n)]
-    g = tok.select(
-        "doc_id",
-        F.concat_ws(" ", *parts).alias("gram"),
-        parts[-1].alias("_last"),
-    ).where(F.col("_last").isNotNull())
-    return g.select(
-        "doc_id", corpus.content_hash_expr("gram").alias("gram_id")
-    ).distinct()
 
 
 def _sql_grams_cte(n: int, name: str = "grams") -> str:
@@ -123,16 +78,16 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: per non-holdout doc, how many of its
     distinct DECON_N-grams appear in the holdout set, and the keep
     verdict. Output: doc_id, n_grams, n_hit, hit_frac, contaminated."""
-    tok = corpus.tokens_long(corpus.load(spark, sf_dir, "documents"))
-    grams = _grams(tok, DECON_N)
+    docs = corpus.load(spark, sf_dir, "documents")
+    grams = corpus.ngrams(docs, DECON_N, "doc_id", ids=("cid",)).distinct()
     holdout = (
         grams.where(F.col("doc_id") % HOLDOUT_MOD == 0)
-        .select("gram_id")
+        .select("cid")
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     body = grams.where(F.col("doc_id") % HOLDOUT_MOD != 0)
-    joined = body.join(holdout, "gram_id", "left")
+    joined = body.join(holdout, "cid", "left")
     out = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams"),
         F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hit"),
@@ -189,10 +144,10 @@ FROM hits"""
 #
 # keep iff top2_frac <= TOP2_MAX and dup3_frac <= DUP3_MAX.
 #
-# Plan: the positional gram build is a narrow array slice over each
-# doc's own tokens (no shuffle); each fraction is one doc-keyed hash
-# aggregate.
-# The 2-gram max-count needs a (doc, gram) pre-aggregate — two-level
+# Plan: the positional grams come from corpus.ngrams inside each doc's
+# own token array (no shuffle) and are grouped on their 64-bit sid; each
+# fraction is one doc-keyed hash aggregate.
+# The 2-gram max-count needs a (doc, sid) pre-aggregate — two-level
 # hash agg, map-side partials on both levels, no window over the
 # corpus. Production materializes the token grain once (staging
 # contract, PLANS.md) so the three gram passes scan columnar staging,
@@ -200,12 +155,6 @@ FROM hits"""
 
 TOP2_MAX = 0.20
 DUP3_MAX = 0.90
-
-
-def _pos_grams(documents: DataFrame, n: int) -> DataFrame:
-    """Positional (non-distinct) n-grams: one row per occurrence
-    (array-sliced like :func:`_gram_strings` — zero Exchange)."""
-    return _gram_strings(documents, n, "doc_id")
 
 
 def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -217,8 +166,8 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("word").alias("n_uniq"),
     )
     g2 = (
-        _pos_grams(documents, 2)
-        .groupBy("doc_id", "gram")
+        corpus.ngrams(documents, 2, "doc_id", ids=("sid",))
+        .groupBy("doc_id", "sid")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")
         .agg(
@@ -228,8 +177,8 @@ def quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     g3 = (
-        _pos_grams(documents, 3)
-        .groupBy("doc_id", "gram")
+        corpus.ngrams(documents, 3, "doc_id", ids=("sid",))
+        .groupBy("doc_id", "sid")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("uniq3"), F.sum("c").alias("tot3"))
@@ -644,9 +593,9 @@ ORDER BY source, rk"""
 # cross-crawl duplication)? Output is the upper-triangular source x
 # source overlap matrix over distinct DECON_N-grams.
 #
-# Physical plan: one window-lead pass to distinct (source, gram_id) —
-# corpus-linear — then a gram-keyed self-join. Per gram the fan-out is
-# (k choose 2) where k <= |sources| is the gram's source posting size,
+# Physical plan: corpus.ngrams rows reduced to distinct (source, cid) —
+# corpus-linear, no window — then a gram-keyed self-join. Per gram the
+# fan-out is (k choose 2) where k <= |sources| is the gram's source posting size,
 # so the join output is bounded by |grams| x |sources|^2 with sources a
 # small constant (hundreds at web scale) — never doc-quadratic. The
 # per-source totals are |sources| rows, broadcast back. Pairs with zero
@@ -659,26 +608,12 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Columns: src_a, src_b (src_a < src_b), grams_a, grams_b,
     grams_both, jaccard (6 dp)."""
-    tok = corpus.tokens_long(corpus.load(spark, sf_dir, "documents"))
-    w = Window.partitionBy("doc_id").orderBy("word_idx")
-    parts = [F.col("word")] + [
-        F.lead("word", i).over(w) for i in range(1, DECON_N)
-    ]
-    # window build, not _gram_strings: see the n=8 trade note on _grams
-    g = (
-        tok.select(
-            "source",
-            F.concat_ws(" ", *parts).alias("gram"),
-            parts[-1].alias("_last"),
-        )
-        .where(F.col("_last").isNotNull())
-        .select("source", corpus.content_hash_expr("gram").alias("gram_id"))
-        .distinct()
-    )
+    docs = corpus.load(spark, sf_dir, "documents")
+    g = corpus.ngrams(docs, DECON_N, "source", ids=("cid",)).distinct()
     tot = g.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a, b = g.alias("a"), g.alias("b")
     pairs = (
-        a.join(b, "gram_id")
+        a.join(b, "cid")
         .where(F.col("a.source") < F.col("b.source"))
         .groupBy(
             F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b")
@@ -852,8 +787,6 @@ def curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output per source: candidates, decon survivors, quality
     survivors, final keepers, and tokens retained.
     """
-    from pyspark.sql.window import Window
-
     docs = corpus.load(spark, sf_dir, "documents")
     decon = decontaminate_ngram(spark, sf_dir).select("doc_id", "contaminated")
     qual = quality_repetition(spark, sf_dir).select(

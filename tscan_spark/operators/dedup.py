@@ -86,7 +86,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # persist their shared shingle subtree (the plan consumes it 2-4x and
 # exchange reuse does not cover it; measured: dropping the persist cost
 # +60% on minhash_lsh at sf0.1); the caller unpersists after consuming.
-from tscan_spark.cache import release_caches, with_cache as _with_cache  # noqa: F401
+from tscan_spark.cache import (  # noqa: F401
+    carry_caches,
+    release_caches,
+    with_cache as _with_cache,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -118,37 +122,16 @@ GROUP BY md5(text)"""
 # ---------------------------------------------------------------------------
 # shingles (shared by Jaccard + MinHash)
 # ---------------------------------------------------------------------------
+#
+# Shingles are corpus.ngrams rows at n = SHINGLE_N: positional (one row
+# per occurrence) ``cid``/``sid`` ids, never strings. Duplicate-insensitive
+# consumers (minhash MIN over ``cid``, the verify's collect_set of
+# ``sid``) take the positional form directly and skip the distinct
+# exchange; set-algebra consumers distinct on the 64-bit ``sid``.
 
 
-def shingles_raw(documents: DataFrame, n: int = SHINGLE_N) -> DataFrame:
-    """Positional (non-distinct) word n-gram shingles: (doc_id, shingle).
-
-    Pure narrow array expression over the document's own token array —
-    the tokens of one document already sit in order inside its ``text``
-    row, so the former lead()-over-Window construction paid a full
-    shuffle + sort of the token grain for an ordering the scan provides
-    for free (guide §2.4: remove shuffles outright). Zero Exchange.
-    Built from arrays_zip over n shifted slices (all codegen) rather
-    than per-position lambdas: a transform/slice HOF variant measured
-    4x slower (interpreted per element), this one is at parity with the
-    old window locally and strictly better on plan shape.
-
-    Duplicate-insensitive consumers (minhash MIN, the verify's
-    collect_set) take this form directly and skip the distinct
-    exchange; set-algebra consumers distinct on the 64-bit sid instead
-    of the ~30-char string (guide §2.3: shuffle narrow keys)."""
-    arr = F.array_remove(F.split(F.col("text"), " "), "")
-    m = F.size(arr) - (n - 1)
-    z = F.arrays_zip(*[F.slice(arr, i + 1, m) for i in range(n)])
-    sh = documents.select(
-        "doc_id", F.explode(F.when(F.size(arr) >= n, z)).alias("z")
-    )
-    return sh.select(
-        "doc_id",
-        F.concat_ws(" ", *[F.col("z").getField(str(i)) for i in range(n)]).alias(
-            "shingle"
-        ),
-    )
+def _shingles(spark: SparkSession, sf_dir: str, ids=("cid", "sid")) -> DataFrame:
+    return corpus.ngrams(_docs(spark, sf_dir), SHINGLE_N, "doc_id", ids=ids)
 
 
 SQL_SHINGLES_CTE = """
@@ -175,14 +158,12 @@ def _verified_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
     naive plan (|cand| * |shingles per doc| intermediate rows — 59M at
     sf0.1, the round-2 profiling hotspot); volume stays |cand| rows.
     """
-    # arrays of 64-bit shingle hashes, not strings: the join output
-    # materializes each doc's array once per candidate appearance, so
-    # element width dominates; xxhash64 ids are engine-internal only
-    # (the emitted jaccard is over set sizes, identical unless two of a
-    # doc's shingles collide in 64 bits)
-    arrs = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("arr")
-    )
+    # arrays of 64-bit sids, not strings: the join output materializes
+    # each doc's array once per candidate appearance, so element width
+    # dominates; sids are engine-internal only (the emitted jaccard is
+    # over set sizes, identical unless two of a doc's shingles collide
+    # in 64 bits)
+    arrs = sh.groupBy("doc_id").agg(F.sort_array(F.collect_set("sid")).alias("arr"))
     j = cand.join(
         arrs.select(F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a")),
         "doc_a",
@@ -227,12 +208,12 @@ def ngram_jaccard_pairs(
     quadratic corpus-scale killer); every EMITTED jaccard is exact over
     the full sets.
 
-    ``sh``: optional pre-built (persisted) string shingle frame shared
-    with a sibling pipeline (dedup_recall_eval builds it once for both
-    the exact and the LSH side — guide §2.4, one fewer corpus pass);
-    its cache is owned by the caller.
+    ``sh``: optional pre-built (persisted) positional shingle frame
+    shared with a sibling pipeline (dedup_recall_eval builds it once for
+    both the exact and the LSH side — guide §2.4, one fewer corpus
+    pass); its cache is owned by the caller.
     """
-    j, sh = _pair_overlaps(spark, sf_dir, sh_str=sh)
+    j, sh = _pair_overlaps(spark, sf_dir, sh=sh)
     n_common = F.col("n_common")
     jac = n_common / (F.col("n_a") + F.col("n_b") - n_common)
     out = j.select(
@@ -244,32 +225,23 @@ def ngram_jaccard_pairs(
     return _with_cache(out.where(F.col("jaccard") >= JACCARD_THRESHOLD), sh)
 
 
-def _pair_overlaps(
-    spark: SparkSession, sf_dir: str, sh_str: DataFrame | None = None
-):
+def _pair_overlaps(spark: SparkSession, sf_dir: str, sh: DataFrame | None = None):
     """Shared exact-overlap core of the shingle pair family: candidate
     pairs from light posting lists + exact heavy correction.  Returns
     (pairs with n_common/n_a/n_b, persisted shingle handle) — callers
     own the final measure/filter AND the cache release (_with_cache).
 
-    ``sh_str``: optional pre-built POSITIONAL (non-distinct) shingle
-    frame (persisted by the caller); when given, the sid frame derives
-    from it instead of re-running the shingle construction."""
-    # all set algebra runs on 64-bit shingle ids: narrow join keys and
-    # shuffle rows instead of ~30-char strings (ids are engine-internal;
-    # a cross-shingle collision would need ~2^32 distinct shingles —
-    # the same convention the verify's collect_set-of-hashes already
-    # uses). The per-doc DISTINCT therefore runs on the 8-byte sid, not
-    # the string (guide §2.3: fewer shuffle bytes, cheaper compares).
+    ``sh``: optional pre-built POSITIONAL (non-distinct) shingle frame
+    (persisted by the caller); when given, the sid set derives from it
+    instead of re-running the shingle construction."""
+    # all set algebra runs on 64-bit sids: narrow join keys and shuffle
+    # rows (a cross-shingle collision would need ~2^32 distinct
+    # shingles — the same convention the verify's collect_set uses).
     # persist: the subtree feeds 4 consumers and exchange reuse does not
     # dedupe it — see the cache contract on _with_cache
-    if sh_str is None:
-        sh_str = shingles_raw(_docs(spark, sf_dir))
-    sh = (
-        sh_str.select("doc_id", F.xxhash64("shingle").alias("sid"))
-        .distinct()
-        .persist()
-    )
+    if sh is None:
+        sh = _shingles(spark, sf_dir, ids=("sid",))
+    sh = sh.select("doc_id", "sid").distinct().persist()
     df_dim = sh.groupBy("sid").agg(F.count(F.lit(1)).alias("_df"))
     heavy = df_dim.where(F.col("_df") > SHINGLE_DF_CAP).select("sid")
     light = sh.join(F.broadcast(heavy), "sid", "left_anti")
@@ -437,23 +409,20 @@ def minhash_signatures(
 ) -> DataFrame:
     """Wide signature row per doc: (doc_id, mh_0 .. mh_15).
 
-    Shingle ids are content hashes (per-row expression — the round-1
-    global dense_rank window is gone) and all 16 minima come out of ONE
-    hash aggregation over (doc_id) — 1x the shingle volume through the
-    shuffle instead of 16x.
+    Shingle ids are the 31-bit content hashes (``cid``, the value the
+    oracle replays) and all 16 minima come out of ONE hash aggregation
+    over (doc_id) — 1x the shingle volume through the shuffle instead
+    of 16x.
     """
     if sh is None:
-        sh = shingles_raw(_docs(spark, sf_dir))
+        sh = _shingles(spark, sf_dir, ids=("cid",))
     # duplicate shingle occurrences are harmless here: MIN over a
     # multiset equals MIN over its set, so no distinct pass is needed
-    doc_sid = sh.select(
-        "doc_id", corpus.content_hash_expr("shingle").alias("sid")
-    )
     aggs = [
-        F.min((F.col("sid") * a + b) % MINHASH_P).alias(f"mh_{j}")
+        F.min((F.col("cid") * a + b) % MINHASH_P).alias(f"mh_{j}")
         for j, (a, b) in enumerate(HASH_AB)
     ]
-    return doc_sid.groupBy("doc_id").agg(*aggs)
+    return sh.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -465,17 +434,17 @@ def minhash_lsh_pairs(
     band signature; every candidate is verified with the exact shingle
     Jaccard, so output quality does not depend on the sketch.
 
-    ``sh``: optional pre-built POSITIONAL shingle frame, already
-    persisted by the caller (cache ownership stays with the caller).
-    Both consumers are duplicate-insensitive (signature MINs, the
-    verify's collect_set), so no distinct pass is paid anywhere in
-    this pipeline.
+    ``sh``: optional pre-built POSITIONAL (doc_id, cid, sid) shingle
+    frame, already persisted by the caller (cache ownership stays with
+    the caller). Both consumers are duplicate-insensitive (signature
+    MINs over ``cid``, the verify's collect_set of ``sid``), so no
+    distinct pass is paid anywhere in this pipeline.
     """
     # the shingle subtree feeds signatures and the verify join — persist
     # it once (cache contract: see _with_cache)
     own_cache = sh is None
     if sh is None:
-        sh = shingles_raw(_docs(spark, sf_dir)).persist()
+        sh = _shingles(spark, sf_dir).persist()
     sigs = minhash_signatures(spark, sf_dir, sh=sh)
     rpb = NUM_HASHES // NUM_BANDS
     band_structs = F.array(
@@ -722,46 +691,17 @@ WHERE bit_count(xor(sh_a, sh_b)) <= {SIMHASH_MAX_HAMMING}"""
 # spans; the per-document verdict is the span count, the duplicated-token
 # count/fraction, and the token count that survives span removal.
 #
-# Physical plan: one lag/lead window per document (sorted locally after a
-# single shuffle on doc_id), one corpus-wide hash aggregate on gram_id
-# (count > 1 — the inverted index; no posting-list join, so no quadratic
-# term: unlike the Jaccard family we only need each gram's multiplicity,
-# never its pairing), one shuffle join back on gram_id, then island
-# merging with doc-bounded windows.  Every stage is linear in corpus
-# size; gram ids use the 31-bit replayable content hash here (oracle
-# constraint) — at 100 TB swap in xxhash64, same plan.
+# Physical plan: the positional grams come from corpus.ngrams (inside
+# each document's own array, no shuffle), one corpus-wide hash aggregate
+# on the gram's cid (count > 1 — the inverted index; no posting-list
+# join, so no quadratic term: unlike the Jaccard family we only need each
+# gram's multiplicity, never its pairing), one shuffle join back on cid,
+# then island merging with doc-bounded windows ordered by pos.  Every
+# stage is linear in corpus size; the cid is the 31-bit replayable
+# content hash (oracle constraint) — at 100 TB key on the 64-bit sid,
+# same plan.
 
 SPAN_K = 15  # gram length in tokens (Lee et al. use 50 BPE tokens)
-
-
-def _span_grams(documents: DataFrame) -> DataFrame:
-    """(doc_id, pos, gram_id) for every SPAN_K-gram with its position.
-
-    Narrow array construction (no Window shuffle — same rationale as
-    :func:`shingles`); ``pos`` keeps the RAW split index of the gram's
-    first token (the tokens_long word_idx contract counts empty-string
-    positions too), so the raw positions ride along the empty filter
-    and the gram text is assembled by arrays_zip over SPAN_K shifted
-    slices (codegen, no per-gram lambda)."""
-    k = SPAN_K
-    raw = F.split(F.col("text"), " ")
-    zs = F.filter(
-        F.arrays_zip(raw, F.sequence(F.lit(0), F.size(raw) - 1)),
-        lambda s: s["0"] != "",
-    )
-    words = F.transform(zs, lambda s: s["0"])
-    poss = F.transform(zs, lambda s: s["1"])
-    m = F.size(words) - (k - 1)
-    z = F.arrays_zip(F.slice(poss, 1, m), *[F.slice(words, i + 1, m) for i in range(k)])
-    g = documents.select(
-        "doc_id", F.explode(F.when(F.size(words) >= k, z)).alias("g")
-    )
-    gram = F.concat_ws(" ", *[F.col("g").getField(str(i + 1)) for i in range(k)])
-    return g.select(
-        "doc_id",
-        F.col("g").getField("0").cast("int").alias("pos"),
-        corpus.content_hash_expr(gram).alias("gram_id"),
-    )
 
 
 def substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,11 +712,11 @@ def substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = corpus.load(spark, sf_dir, "documents")
     tok = corpus.tokens_long(docs)
-    grams = _span_grams(docs)
-    dup_ids = grams.groupBy("gram_id").agg(F.count(F.lit(1)).alias("n")).where(
+    grams = corpus.ngrams(docs, SPAN_K, "doc_id", pos=True, ids=("cid",))
+    dup_ids = grams.groupBy("cid").agg(F.count(F.lit(1)).alias("n")).where(
         F.col("n") > 1
     )
-    hits = grams.join(dup_ids.select("gram_id"), "gram_id")
+    hits = grams.join(dup_ids.select("cid"), "cid")
     w = Window.partitionBy("doc_id").orderBy("pos")
     flagged = hits.select(
         "doc_id",
@@ -1286,17 +1226,16 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (heavy-only overlap, dedup.py:204).  Plan: the two pair pipelines
     plus ONE full-outer join at pair cardinality (both sides are
     near-dup-sparse — orders of magnitude below doc^2) and a single
-    summary aggregate.  The positional shingle frame — the one subtree
-    both pipelines start from — is built and persisted ONCE here and
-    shared (guide §2.4: one shingle construction pass instead of two).
+    summary aggregate.  The positional (doc_id, sid, cid) shingle frame
+    — the one subtree both pipelines start from — is built and persisted
+    ONCE here and shared (guide §2.4: one shingle construction pass
+    instead of two).
     """
-    sh = shingles_raw(_docs(spark, sf_dir)).persist()
-    exact = ngram_jaccard_pairs(spark, sf_dir, sh=sh).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_exact")
-    )
-    lsh = minhash_lsh_pairs(spark, sf_dir, sh=sh).select(
-        "doc_a", "doc_b", F.lit(1).alias("in_lsh")
-    )
+    sh = _shingles(spark, sf_dir).persist()
+    exact_pairs = ngram_jaccard_pairs(spark, sf_dir, sh=sh)
+    lsh_pairs = minhash_lsh_pairs(spark, sf_dir, sh=sh)
+    exact = exact_pairs.select("doc_a", "doc_b", F.lit(1).alias("in_exact"))
+    lsh = lsh_pairs.select("doc_a", "doc_b", F.lit(1).alias("in_lsh"))
     joined = exact.join(lsh, ["doc_a", "doc_b"], "full")
     out = joined.agg(
         F.coalesce(F.sum("in_exact"), F.lit(0)).cast("int").alias("n_exact"),
@@ -1324,10 +1263,8 @@ def dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("lsh_recall"),
     )
-    caches = list(getattr(exact, "_tscan_caches", [])) + list(
-        getattr(lsh, "_tscan_caches", [])
-    )
-    return _with_cache(out, *caches, sh)
+    # the cache handles ride on the pair frames, not on their selects
+    return _with_cache(carry_caches(out, exact_pairs, lsh_pairs), sh)
 
 
 def sql_dedup_recall_eval() -> str:

@@ -18,21 +18,11 @@ assignment bit-for-bit.  The target domain is ``source = 'src0'``
 Plan shape (the part that matters at 100 TB):
 
 - ONE corpus-sized frame: the hashed feature grain (doc_id, source,
-  bucket) — a narrow explode + per-row hash + one window (lead() for
-  bigrams, partitioned by doc_id: hash-partitioned, no global sort).
-  Persisted under the cache contract for its two consumers; at scale
-  this persist is the staging-table materialization (cache.py).
-- The window shuffles INTEGERS, not strings: each token is hashed
-  once at the scan, the window leads (hash, length), and the bigram
-  hash is composed arithmetically via the polynomial identity
-  h(x || y) = (h(x) * 131^len(y) + h(y)) mod p — so no bigram string
-  is ever built or re-folded.  Measured on 160k docs (17M features):
-  string-shuffle form 12.2s/10.4s at local[4]/local[16] (4->16
-  efficiency 0.29, bandwidth-bound); this form 10.2s/4.7s
-  (efficiency 0.54, 2.2x at 16 cores).  An all-array zero-shuffle
-  form (bigrams inside the token array via nested higher-order
-  functions) was tried and REJECTED: nested HOF evaluation is
-  interpreted per element — 442s on the same input.
+  bucket) — the unigram and bigram ``cid`` rows of corpus.ngrams, built
+  inside each document's token array (no window, no word string in any
+  exchange), reduced to per-doc bucket counts.  Persisted under the
+  cache contract for its two consumers; at scale this persist is the
+  staging-table materialization (cache.py).
 - Both distributions come from ONE pass over that grain: a single
   N_BUCKETS-row aggregate computes cnt_raw and cnt_target together
   (count + conditional count), so the target subset is never
@@ -51,7 +41,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from tscan_spark import corpus
 from tscan_spark.cache import with_cache as _with_cache
@@ -61,42 +50,9 @@ TARGET_SOURCE = "src0"
 
 
 def _feature_grain(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, bucket) — one row per unigram and per bigram.
-
-    Tokens are hashed ONCE at the scan; the window carries only
-    (hash, length) ints and the bigram hash is composed with modular
-    arithmetic (see module docstring).  All intermediates stay below
-    2^63: (h*131+32) % p < 2^31 before the multiply, and
-    2^31 * 2^31 < 2^63 (DuckDB-compatible bound, corpus.py).
-    """
-    B, P = corpus.HASH_BASE, corpus.HASH_MOD
-    tok = corpus.tokens_long(docs).select(
-        "doc_id",
-        "source",
-        "word_idx",
-        corpus.content_hash_expr("word").alias("h"),
-        F.length("word").cast("long").alias("len"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("word_idx")
-    tok2 = tok.select(
-        "doc_id",
-        "source",
-        "h",
-        F.lead("h").over(w).alias("h_next"),
-        F.lead("len").over(w).alias("len_next"),
-    )
-    # 131^len(next) mod p — a len-step integer fold (words are short)
-    powmod = F.aggregate(
-        F.sequence(F.lit(1), F.col("len_next").cast("int")),
-        F.lit(1).cast("long"),
-        lambda acc, _: (acc * B) % P,
-    )
-    h_big = (((F.col("h") * B + 32) % P) * powmod + F.col("h_next")) % P
-    uni = tok2.select("doc_id", "source", (F.col("h") % N_BUCKETS).alias("bucket"))
-    big = tok2.where(F.col("h_next").isNotNull()).select(
-        "doc_id", "source", (h_big % N_BUCKETS).alias("bucket")
-    )
-    return uni.unionByName(big)
+    """(doc_id, source, bucket) — one row per unigram and per bigram."""
+    grams = corpus.ngrams(docs, (1, 2), "doc_id", "source", ids=("cid",))
+    return grams.select("doc_id", "source", (F.col("cid") % N_BUCKETS).alias("bucket"))
 
 
 def dsir_importance(
