@@ -35,7 +35,9 @@ def run_leg(cpus: int, rep: int, sf_dir: str, op: str = "multiword", runs: int =
     code = f"""
 import json, time
 from pyspark.sql import SparkSession, functions as F
+from tscan_spark.session import BUILDER_CONF, tune
 spark = (SparkSession.builder.master('local[{cpus}]')
+         .config(map=BUILDER_CONF)
          .config('spark.sql.shuffle.partitions','{max(cpus, 8)}')
          .config('spark.ui.enabled','false')
          .config('spark.ui.showConsoleProgress','false')
@@ -43,7 +45,6 @@ spark = (SparkSession.builder.master('local[{cpus}]')
          .config('spark.sql.files.maxPartitionBytes', str(16 * 1024 * 1024))
          .getOrCreate())
 spark.sparkContext.setLogLevel('ERROR')
-from tscan_spark.session import tune
 tune(spark)
 from tscan_spark import corpus
 from tscan_spark.operators import sequential

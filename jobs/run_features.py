@@ -44,14 +44,14 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from tscan_spark.registry import QUERIES
-    from tscan_spark.session import tune
+    from tscan_spark.session import BUILDER_CONF, tune
 
     if args.list:
         for name in QUERIES:
             print(name)
         return 0
 
-    spark = SparkSession.builder.appName("tscan_spark_job").getOrCreate()
+    spark = SparkSession.builder.appName("tscan_spark_job").config(map=BUILDER_CONF).getOrCreate()
     tune(spark)
     spark.sparkContext.setLogLevel("WARN")
 

@@ -640,6 +640,25 @@ def test_np_dot_fp_matches_jvm_expression(spark):
     assert all(r.np_dot == r.jvm_dot for r in got), got
 
 
+def test_round_half_up_matches_spark_round_below_tie(spark):
+    """The numpy HALF_UP step equals Spark's ROUND(v, 0) on doubles one
+    ulp either side of a .5 tie, both signs: floor(v+0.5) rounded
+    0.49999999999999994 up to 1 where Spark gives 0."""
+    import numpy as np
+
+    from tscan_spark.operators.similarity import _round_half_up
+
+    ties = np.array([0.5, 1.5, 2.5, 1e6 + 0.5, 2.0**51 + 0.5])
+    pos = np.concatenate(
+        [ties, np.nextafter(ties, 0.0), np.nextafter(ties, np.inf), [0.0, 0.25, 3.0]]
+    )
+    vals = np.concatenate([pos, -pos])
+    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)], "i int, v double")
+    got = df.select("i", F.expr("ROUND(CAST(v AS DOUBLE), 0)").alias("r")).orderBy("i").collect()
+    want = np.array([r.r for r in got])
+    np.testing.assert_array_equal(_round_half_up(vals), want)
+
+
 def test_paragraph_ext_match_oracle(spark, oracle):
     df = QUERIES["tscan_paragraph_features_ext"](spark, SF_DIR)
     assert_matches_oracle(df, oracle, ORACLES["tscan_paragraph_features_ext"])

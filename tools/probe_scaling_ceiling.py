@@ -22,9 +22,12 @@ from __future__ import annotations
 
 import json
 import multiprocessing as mp
+import os
 import subprocess
 import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 LOOP = 3_000_000
 TASKS = 128
@@ -49,7 +52,9 @@ SPARK_CODE = """
 import time, json
 from pyspark.sql import SparkSession
 import pandas as pd
+from tscan_spark.session import BUILDER_CONF
 spark = (SparkSession.builder.master('local[{c}]')
+         .config(map=BUILDER_CONF)
          .config('spark.sql.shuffle.partitions','{c}')
          .config('spark.ui.enabled','false').getOrCreate())
 spark.sparkContext.setLogLevel('ERROR')
@@ -72,6 +77,7 @@ def probe_spark(n: int) -> float:
         [sys.executable, "-c", SPARK_CODE.format(c=n, tasks=TASKS, loop=LOOP)],
         capture_output=True,
         text=True,
+        cwd=REPO,
     )
     line = [l for l in r.stdout.splitlines() if l.startswith("{")][-1]
     return json.loads(line)["sec"]
