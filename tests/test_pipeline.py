@@ -1,7 +1,16 @@
 """Correctness of the tokenize -> annotate -> aggregate ladder vs DuckDB."""
 
+import hashlib
+
+import pytest
+
 from tests.conftest import SF_DIR, assert_matches_oracle
 from tscan_spark import corpus, pipeline
+
+# sha256 of ",".join(columns) of both document profiles, in order
+PROFILE_COLUMNS_SHA256 = (
+    "a3b60eaf4ec99ba9cba222ab3d0526d6d5c2517c7884736da65397d4673a9136"
+)
 
 
 def test_tokens_long_matches_oracle(spark, oracle):
@@ -87,10 +96,38 @@ def test_word_csv_match_oracle(spark, oracle):
     assert_matches_oracle(df, oracle, ORACLES["tscan_word_csv"])
 
 
-def test_doc_profile_match_oracle(spark, oracle):
+@pytest.mark.parametrize("name", ["tscan_doc_profile", "tscan_doc_profile_staged"])
+def test_doc_profile_match_oracle(spark, oracle, name):
     from tscan_spark.registry import ORACLES, QUERIES
 
-    df = QUERIES["tscan_doc_profile"](spark, SF_DIR)
-    assert_matches_oracle(df, oracle, ORACLES["tscan_doc_profile"])
-    # the profile is genuinely wide (structstats-style single row per doc)
-    assert len(df.columns) >= 118
+    df = QUERIES[name](spark, SF_DIR)
+    assert_matches_oracle(df, oracle, ORACLES[name])
+    # The profile's columns are whatever its batteries emit minus the
+    # drops in registry._PROFILE_PARTS, so pin the exact contract: a
+    # battery that gains a column, or two parts left sharing a name,
+    # changes the hash or the count.
+    assert len(df.columns) == 560
+    assert len(set(df.columns)) == len(df.columns)
+    digest = hashlib.sha256(",".join(df.columns).encode()).hexdigest()
+    assert digest == PROFILE_COLUMNS_SHA256
+
+
+def test_staged_profile_grain_spreads_single_file_input(spark, tmp_path):
+    """The staged profile spreads the token grain to the session's
+    parallelism when the documents table has fewer files than that (the
+    one-file test tables), and leaves an input with enough files alone."""
+    import os
+
+    from tscan_spark import registry
+
+    par = spark.sparkContext.defaultParallelism
+    staging = tmp_path / "staging"
+    registry._doc_profile_impl(spark, SF_DIR, staging_dir=str(staging))
+    parts = [f for f in os.listdir(staging / "token_grain") if f.startswith("part-")]
+    assert len(parts) == par
+
+    spread_dir = tmp_path / "sf"
+    documents = corpus.load(spark, SF_DIR, "documents")
+    documents.repartition(par).write.parquet(str(spread_dir / "documents.parquet"))
+    grain = registry._profile_grain(spark, str(spread_dir), spread=True)
+    assert "RoundRobinPartitioning" not in grain._jdf.queryExecution().toString()

@@ -435,68 +435,6 @@ def doc_ratios(
     return doc.select("*", *_post_agg_cols())
 
 
-def doc_ratios_columns() -> list[str]:
-    """The exact output column list of :func:`doc_ratios` (used by the
-    unified profile's oracle renderer; pytest asserts it matches)."""
-    cols = [
-        "doc_id", "word_cnt", "noun_cnt", "adj_cnt", "verb_cnt",
-        "adverb_cnt", "conj_cnt", "pron_cnt",
-    ]
-    for c in SEM_CLASSES:
-        cols += [f"sem_{c.lower()}_cnt", f"sem_{c.lower()}_strict_cnt"]
-    cols += [
-        "sem_unfound_cnt", "compound_cnt", "noncomp_noun_cnt",
-        "charcnt_head_mean", "head_freq_log_mean", "sat_freq_log_mean",
-        "head_sat_freq_log_mean", "top1000_head_cnt",
-        "word_freq_log_corr_mean", "word_freq_log_mean",
-    ]
-    cols += [f"{n}_cnt" for n, _ in DENSITY_FLAGS if n != "compound"]
-    cols += [f"conn_{c.lower()}_cnt" for c in CONN_CLASSES]
-    cols += [f"sit_{c.lower()}_cnt" for c in SIT_CLASSES]
-    cols += [
-        "char_sum_r", "inh_cnt", "inh_strict_cnt", "compound3_cnt",
-        "char_noun_sum", "char_noncomp_sum", "char_comp_sum", "char_corr_sum",
-        "word_freq_log_strict", "word_freq_log_corr_strict",
-        "lemma_freq_log", "lemma_freq_log_strict",
-        "word_freq_log_nw", "word_freq_log_ong_nw", "word_freq_log_sam_nw",
-        "word_freq_log_nw_corr",
-        "name_cnt", "morph_sum", "morph_zn_sum", "char_zn_sum",
-        "char_noun_corr_sum", "char_sat_sum",
-        "word_freq_log_zn", "lemma_freq_log_zn",
-        "word_freq_log_zn_strict", "lemma_freq_log_zn_strict",
-        "word_freq_log_corr_zn_strict", "word_freq_log_corr_zn",
-    ]
-    cols += [f"pron{p}_cnt" for p in (1, 2, 3)]
-    cols += [f"{b}_cnt" for b, _ in lexicons.STAPH_BANDS]
-    for b, _ in lexicons.BANDS:
-        cols += [
-            f"{b}_inh_cnt", f"{b}_inh_strict_cnt", f"{b}_nw_cnt",
-            f"{b}_nsam_cnt", f"{b}_sam_cnt", f"{b}_sat_cnt",
-            f"{b}_corr_cnt", f"{b}_nw_corr_cnt",
-        ]
-        if b != "top1000":
-            cols.append(f"{b}_head_cnt")
-    cols += [f"{n}_d" for n, _ in DENSITY_FLAGS]
-    cols += [f"conn_{c.lower()}_d" for c in CONN_CLASSES]
-    cols += [f"sit_{c.lower()}_d" for c in SIT_CLASSES]
-    cols += [
-        "let_per_wrd", "wrd_per_let", "let_per_wrd_zn", "wrd_per_let_zn",
-        "morf_per_wrd", "wrd_per_morf", "morf_per_wrd_zn", "wrd_per_morf_zn",
-        "namen_p", "namen_d", "let_per_wrd_satwrd", "let_per_wrd_nw_corr",
-        "let_per_wrd_nw", "let_per_wrd_nsam",
-        "let_per_wrd_sam", "let_per_wrd_corr", "samenst_p",
-        "samenst3_d", "samenst3_p",
-    ]
-    cols += [f"{b}_p" for b, _ in lexicons.STAPH_BANDS]
-    for b, _ in lexicons.BANDS:
-        cols += [
-            f"{b}_inh_p", f"{b}_inh_strict_p", f"{b}_nw_p", f"{b}_nsam_p",
-            f"{b}_sam_p", f"{b}_head_p", f"{b}_sat_p", f"{b}_corr_p",
-            f"{b}_nw_corr_p",
-        ]
-    return cols
-
-
 def _sql_word_grain_with() -> str:
     """The full ``WITH ... wg AS (...)`` prelude: annotated tokens +
     frequency/staph/lemma lexicon joins + compound head/sat flags — the

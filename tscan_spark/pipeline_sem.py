@@ -403,34 +403,6 @@ def _sem_out_cols(keys: tuple[str, ...]) -> tuple:
 # --- DuckDB oracle (rendered from the same inventories) -------------------
 
 
-def sem_fine_columns(keys: tuple[str, ...] = ("doc_id",)) -> list[str]:
-    cols = list(keys)
-    for k in NOUN_FINE_ALL:
-        cols += [f"{k}_nw_p", f"{k}_nw_d"]
-    for k in ADJ_FINE_ALL:
-        nm = k if k.endswith("_bvnw") else f"{k}_bvnw"
-        cols.append(f"{nm}_p")
-        if k != "undefined_bvnw":
-            cols.append(f"{nm}_d")
-    for nm in ["waarn_nmens_bvnw", "spec_ev_bvnw", "alg_ev_bvnw", "ep_ev_bvnw",
-               "subj_bvnw"]:
-        cols += [f"{nm}_p", f"{nm}_d"]
-    cols += ["gelabeld_bvnw_p", "gedekte_bvnw_p"]
-    cols += [
-        "conc_ww_p", "conc_ww_d", "abstr_ww_p", "abstr_ww_d", "undefined_ww_p",
-        "gedekte_ww_p", "actieww_p", "actieww_d", "toestww_p", "toestww_d",
-        "procesww_p", "procesww_d", "undefined_atp_ww_p", "gedekte_bw_p",
-    ]
-    cols += [f"int_{k}_d" for k, _ in INT_TAGS]
-    cols += [f"form_{k}_d" for k, _ in FORM_TAGS]
-    for _, col in PART_COLS:
-        for pos in PART_POS:
-            cols += [f"{col}_{pos}_cnt", f"{col}_{pos}_d"]
-    cols += ["lidw_d", "spec_d", "tuss_d", "interp_d", "pv_frog_d",
-             "pv_frog_per_zin"]
-    return cols
-
-
 def sql_doc_sem_fine(keys: tuple[str, ...] = ("doc_id",)) -> str:
     h_nw, h_adj = _sql_salt_hash("#nw"), _sql_salt_hash("#adj")
     noun_fine = (

@@ -1126,6 +1126,11 @@ def q_sem_fine_par(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is N parallel aggregation subtrees converging in doc_id equi-joins
 # (AQE broadcasts the smaller sides at bench scale; co-partitioned
 # shuffle joins at corpus scale).
+#
+# _PROFILE_PARTS is the only place that says which battery contributes
+# which columns: a part contributes its battery's output columns minus
+# its drops, in the battery's order, on both engines (SELECT * over the
+# doc_id join). A battery that gains a column adds it to the profile.
 
 _PROFILE_PARTS: list[tuple[str, list[str]]] = [
     # (query name, columns dropped to keep the join collision-free)
@@ -1294,16 +1299,18 @@ def _lint_col_sql() -> list[tuple[str, str]]:
     return out
 
 
-def _sql_doc_profile() -> str:
-    selects = ["b0.*"]
-    froms = [f"({ORACLES[_PROFILE_PARTS[0][0]]}\n) b0"]
-    for i, (name, drops) in enumerate(_PROFILE_PARTS[1:], start=1):
-        froms.append(f"JOIN ({ORACLES[name]}\n) b{i} USING (doc_id)")
-        # explicit keep list rendered lazily at runtime by the builder
-        selects.append(f"__COLS_{i}__")
-    inner = "SELECT " + ",\n       ".join(selects) + "\nFROM " + "\n".join(froms)
+def _profile_sql(sides: list[str]) -> str:
+    """The profile's SQL, the same text in Spark and DuckDB: ``SELECT *``
+    over the doc_id join of ``sides`` (one FROM item per
+    ``_PROFILE_PARTS`` entry), with the cross-battery ratio block and
+    the LiNT block on top. The ratios are cast to DOUBLE because Spark's
+    ROUND over the decimal division would otherwise return a decimal;
+    DuckDB's is already DOUBLE."""
+    inner = f"SELECT *\nFROM {sides[0]} b0" + "".join(
+        f"\nJOIN {side} b{i} USING (doc_id)" for i, side in enumerate(sides[1:], 1)
+    )
     ratios = ",\n       ".join(
-        f"{_profile_ratio_expr(num, den, kind)} AS {name}"
+        f"CAST(({_profile_ratio_expr(num, den, kind)}) AS DOUBLE) AS {name}"
         for name, num, den, kind in _PROFILE_RATIOS
     )
     lint = ",\n       ".join(f"{sql} AS {name}" for name, sql in _lint_col_sql())
@@ -1311,6 +1318,17 @@ def _sql_doc_profile() -> str:
         f"SELECT q.*,\n       {lint}\nFROM (\n"
         f"SELECT p.*,\n       {ratios}\nFROM (\n{inner}\n) p\n) q"
     )
+
+
+def _sql_doc_profile() -> str:
+    """DuckDB oracle: each battery's oracle minus the part's drops."""
+    sides = [
+        f"(SELECT * EXCLUDE ({', '.join(drops)}) FROM ({ORACLES[name]}\n))"
+        if drops
+        else f"({ORACLES[name]}\n)"
+        for name, drops in _PROFILE_PARTS
+    ]
+    return _profile_sql(sides)
 
 
 def _profile_grain(
@@ -1327,19 +1345,21 @@ def _profile_grain(
 
     ``spread=True`` (the STAGED materialization path only): raise the
     scan to the session's parallelism before the annotation ladder when
-    the input plans fewer partitions — the generated test tables are
-    single-row-group files, so the whole 42-column ladder would
-    otherwise execute on ONE task feeding the staging write (measured:
-    grain write 3.5-3.8 -> 1.6-1.8 s at sf0.1). Scale-adaptive: a real
-    corpus scan already has >= parallelism splits and the repartition
-    is a no-op; paid ONCE into the materialization and amortized by all
-    ~13 staged battery reads (unlike a blanket scan spread, which was
-    measured a net loss and reverted — OPTIMIZATION_r06.md). Values are
-    partitioning-independent (bitwise 118-query audit + pinned test)."""
+    the input has fewer files than that — the generated test tables are
+    single-file, single-row-group tables, so the whole 42-column ladder
+    would otherwise execute on ONE task feeding the staging write
+    (measured: grain write 3.5-3.8 -> 1.6-1.8 s at sf0.1). A real corpus
+    already has >= parallelism files and keeps its scan; the spread is
+    paid ONCE into the materialization and amortized by all ~13 staged
+    battery reads (unlike a blanket scan spread, which was measured a
+    net loss and reverted — OPTIMIZATION_r06.md). The file count comes
+    from ``inputFiles()``, which works on classic and Spark Connect
+    sessions alike. Values are partitioning-independent (bitwise
+    118-query audit + pinned test)."""
     documents = corpus.load(spark, sf_dir, "documents")
     if spread:
         par = spark.sparkContext.defaultParallelism
-        if documents.rdd.getNumPartitions() < par:
+        if len(documents.inputFiles()) < par:
             documents = documents.repartition(par)
     tok = annotate.annotate_extended(
         annotate.annotate(corpus.tokens_long(documents))
@@ -1358,7 +1378,11 @@ def _doc_profile_impl(
     token-level battery and ONE parse-node grain (derived from the same
     token grain) feeds every parse battery — the profile's ~12
     aggregation paths share two analyzed lineages instead of 12
-    independent ones (the round-2 multi-scan finding).
+    independent ones (the round-2 multi-scan finding). The parts are
+    built one after another: building them on 8 threads saved 0.3 s of
+    a ~6 s build (one traced staged run), too little for a pool. The
+    profile's columns are whatever each battery emits minus its
+    ``_PROFILE_PARTS`` drops; no column list is kept anywhere else.
 
     ``staging_dir=None`` (in-memory variant): the grains are NOT
     persisted — both are pure codegen projections over a small scan,
@@ -1395,164 +1419,41 @@ def _doc_profile_impl(
     else:
         grain = _profile_grain(spark, sf_dir)
         nodes = parse.parse_nodes(spark, sf_dir, tok=grain)
-    builders = {
-        "tscan_doc_features": lambda: pipeline.doc_features(spark, sf_dir, wordf=grain),
-        "tscan_doc_features_ext": lambda: pipeline_ext.doc_features_ext(
+    frames = {
+        "tscan_doc_features": pipeline.doc_features(spark, sf_dir, wordf=grain),
+        "tscan_doc_features_ext": pipeline_ext.doc_features_ext(
             spark, sf_dir, wordf=grain
         ),
-        "tscan_doc_ratios": lambda: pipeline_ratios.doc_ratios(
-            spark, sf_dir, wordf=grain
-        ),
-        "prevalence_features": lambda: _prevalence_agg(spark, sf_dir, grain),
-        "parse_doc_summary": lambda: parse.doc_parse_summary(
-            spark, sf_dir, nodes=nodes
-        ),
-        "parse_verb_doc": lambda: parse.verb_doc_summary(spark, sf_dir, nodes=nodes),
-        "parse_dep_pairs": lambda: parse.dep_pair_distances(
-            spark, sf_dir, nodes=nodes
-        ),
-        "parse_dep_distance": lambda: parse.dep_distance(spark, sf_dir, nodes=nodes),
-        "ner_features": lambda: ner.ner_features(spark, sf_dir, tok=grain),
-        "np_chunk_features": lambda: ner.np_chunk_features(spark, sf_dir, tok=grain),
-        "tscan_general_doc_features": lambda: vocab_dim.general_doc_features(
+        "tscan_doc_ratios": pipeline_ratios.doc_ratios(spark, sf_dir, wordf=grain),
+        "prevalence_features": _prevalence_agg(spark, sf_dir, grain),
+        "parse_doc_summary": parse.doc_parse_summary(spark, sf_dir, nodes=nodes),
+        "parse_verb_doc": parse.verb_doc_summary(spark, sf_dir, nodes=nodes),
+        "parse_dep_pairs": parse.dep_pair_distances(spark, sf_dir, nodes=nodes),
+        "parse_dep_distance": parse.dep_distance(spark, sf_dir, nodes=nodes),
+        "ner_features": ner.ner_features(spark, sf_dir, tok=grain),
+        "np_chunk_features": ner.np_chunk_features(spark, sf_dir, tok=grain),
+        "tscan_general_doc_features": vocab_dim.general_doc_features(
             spark, sf_dir, tok=grain
         ),
-        "tscan_sem_fine": lambda: pipeline_sem.doc_sem_fine(
-            spark, sf_dir, wordf=grain
-        ),
-        "doc_mtld": lambda: sequential.doc_mtld(spark, sf_dir, grain=grain),
+        "tscan_sem_fine": pipeline_sem.doc_sem_fine(spark, sf_dir, wordf=grain),
+        "doc_mtld": sequential.doc_mtld(spark, sf_dir, grain=grain),
     }
-    # The 13 battery constructions are independent pure plan builds over
-    # immutable frames; nearly all their wall time is py4j socket
-    # round-trip latency (~0.6 ms x thousands of calls), so a small
-    # thread pool overlaps them (py4j gives each Python thread its own
-    # connection + JVM thread; no jobs run during construction). Order
-    # and results are deterministic: each part lands in its own slot.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _build(item):
-        name, drops = item
-        build = builders.get(name)
-        return (build() if build else QUERIES[name](spark, sf_dir)).drop(*drops)
-
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        built = list(pool.map(_build, _PROFILE_PARTS))
-    parts = {f"b{i}": df for i, df in enumerate(built)}
     # ONE parameterized spark.sql call assembles the 13-way doc_id join
     # + cross-battery ratio block + D4 LiNT scores (the same SQL text
     # shape as the oracle). The former left-deep .join() chain + two
     # wide selects re-analyzed the accumulated ~510-column plan on the
     # JVM once per DataFrame call (~14 full tree traversals, 2.6 s of
     # the profile's warm construction at sf0.1); the single SQL text
-    # resolves every part subtree once. Semantics identical: INNER JOIN
-    # USING (doc_id) == .join(part, "doc_id"), same column order, same
-    # ratio/LiNT expressions, same DOUBLE cast.
-    return spark.sql(_profile_assembly_sql(), **parts)
-
-
-@_lru_cache(maxsize=None)
-def _profile_assembly_sql() -> str:
-    """Constant assembly SQL over the 13 profile part frames
-    ({b0}..{b12} spark.sql references), process-cached."""
-    cols = _profile_cols()
-    selects = ["b0.*"]
-    froms = ["{b0} b0"]
-    for i in range(1, len(_PROFILE_PARTS)):
-        froms.append(f"JOIN {{b{i}}} b{i} USING (doc_id)")
-        selects.append(
-            ",\n       ".join(f"b{i}.{c}" for c in cols[i] if c != "doc_id")
-        )
-    inner = "SELECT " + ",\n       ".join(selects) + "\nFROM " + "\n".join(froms)
-    ratios = ",\n       ".join(
-        f"CAST(({_profile_ratio_expr(num, den, kind)}) AS DOUBLE) AS {name}"
-        for name, num, den, kind in _PROFILE_RATIOS
-    )
-    lint = ",\n       ".join(f"{sql} AS {name}" for name, sql in _lint_col_sql())
-    return (
-        f"SELECT q.*,\n       {lint}\nFROM (\n"
-        f"SELECT p.*,\n       {ratios}\nFROM (\n{inner}\n) p\n) q"
-    )
-
-
-def _render_profile_oracle(spark_cols_by_part: list[list[str]]) -> str:
-    sql = _sql_doc_profile()
-    for i, cols in enumerate(spark_cols_by_part[1:], start=1):
-        kept = ",\n       ".join(f"b{i}.{c}" for c in cols if c != "doc_id")
-        sql = sql.replace(f"__COLS_{i}__", kept)
-    return sql
-
-
-def _profile_cols() -> list[list[str]]:
-    # drop lists are static, so the kept columns are derivable without a
-    # Spark session: they mirror each part's documented output schema
-    known = {
-        "tscan_doc_features_ext": [
-            "doc_id", "word_cnt", "morph_neg_cnt", "nominal_cnt", "compound_cnt",
-            "pers_ref_cnt", "content_strict_cnt", "comp_char_sum",
-            "uniq_strict_lemmas", "pv_cnt", "inf_cnt", "prenom_cnt", "afk_cnt",
-            "sem_concrete_cnt", "sem_abstract_cnt", "sem_human_cnt",
-            "adv_general_cnt", "adv_manner_cnt",
-            "afk_tech_cnt", "afk_overig_cnt",
-            "multi_neg_cnt", "question_cnt",
-            "sent_cnt", "ttr_strict", "morph_neg_d", "nominal_d", "pers_ref_d",
-            "lint_score", "lint_level",
-        ],
-        "tscan_doc_ratios": pipeline_ratios.doc_ratios_columns(),
-        "parse_doc_summary": [
-            "doc_id", "sent_cnt", "clause_cnt", "corrected_clause_cnt",
-            "parse_fail_cnt", "node_cnt", "betr_cnt", "bijw_cnt", "compl_cnt",
-            "smain_cnt", "ssub_cnt", "sv1_cnt", "cnj_smain_cnt", "cnj_ssub_cnt",
-            "cnj_sv1_cnt", "small_cnj_cnt", "adverbial_cnt", "los_betr_cnt",
-            "np_mod_cnt", "infin_compl_cnt", "d_level_gt4_cnt", "d_level_avg",
-            "clause_d",
-        ],
-        "parse_verb_doc": [
-            "doc_id", "passive_cnt", "copula_cnt", "time_cnt", "modal_cnt",
-            "head_cnt", "imperative_sent_cnt", "sent_cnt",
-        ],
-        "parse_dep_pairs": ["doc_id"]
-        + [c for name, *_ in parse.AL_PAIRS for c in (f"{name}_cnt", name)]
-        + ["al_gem"],
-        "parse_dep_distance": [
-            "doc_id", "al_gem", "al_max", "al_gem_flat", "sent_cnt",
-        ],
-        "doc_mtld": ["doc_id"]
-        + [
-            "mtld_words", "mtld_lemmas", "mtld_content", "mtld_content_strict",
-            "mtld_names",
-        ]
-        + [f"mtld_conn_{c.lower()}" for c in sequential.MTLD_CONN_CLASSES]
-        + ["mtld_conn_all"]
-        + [f"mtld_sit_{c.lower()}" for c in sequential.MTLD_SIT_CLASSES],
-        "tscan_general_doc_features": [
-            "doc_id", "word_cnt", "general_noun_cnt", "general_verb_cnt",
-            "my_class_cnt", "morph_neg_strict_cnt",
-            "gen_separate_cnt", "gen_related_cnt", "gen_acting_cnt",
-            "gen_knowledge_cnt", "gen_discussion_cnt", "gen_development_cnt",
-            "morph_sum", "morph_noun_sum", "noun_dim_cnt",
-            "morf_per_wrd", "wrd_per_morf", "morf_per_wrd_nw",
-            "wrd_per_morf_nw", "alg_nw_d", "alg_ww_d",
-        ],
-        "ner_features": [
-            "doc_id", "word_cnt", "per_tok_cnt", "loc_tok_cnt", "org_tok_cnt",
-            "eve_tok_cnt", "misc_tok_cnt", "entity_cnt", "avg_ent_len",
-            "pers_ref_ner_cnt",
-        ],
-        "np_chunk_features": [
-            "doc_id", "np_cnt", "np_size_sum", "indef_np_cnt", "avg_np_len",
-        ],
-        "prevalence_features": [
-            "doc_id", "word_cnt", "covered_cnt", "prevalence_p", "prevalence_z",
-        ],
-        "tscan_sem_fine": pipeline_sem.sem_fine_columns(),
+    # resolves every part subtree once.
+    parts = {
+        f"b{i}": frames[name].drop(*drops)
+        for i, (name, drops) in enumerate(_PROFILE_PARTS)
     }
-    cols = [["doc_id"]]  # base contributes via b0.*
-    for name, drops in _PROFILE_PARTS[1:]:
-        cols.append([c for c in known[name] if c not in drops])
-    return cols
+    sides = [f"{{b{i}}}" for i in range(len(_PROFILE_PARTS))]
+    return spark.sql(_profile_sql(sides), **parts)
 
 
-@query("tscan_doc_profile", oracle=_render_profile_oracle(_profile_cols()))
+@query("tscan_doc_profile", oracle=_sql_doc_profile())
 def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The wide per-document output vector (structStats::toCSV shape):
     base counters + extended battery + fan-out/compound/density block +
@@ -1560,7 +1461,7 @@ def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_profile_impl(spark, sf_dir)
 
 
-@query("tscan_doc_profile_staged", oracle=_render_profile_oracle(_profile_cols()))
+@query("tscan_doc_profile_staged", oracle=_sql_doc_profile())
 def q_doc_profile_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME profile vector through the production staged plan: the
     annotated token grain and the parse-node grain are written ONCE to
